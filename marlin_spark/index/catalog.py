@@ -251,6 +251,18 @@ class IndexCatalog:
                 out.append(d)
         return out
 
+    def read_deltas(self, spark: SparkSession, name: str) -> DataFrame | None:
+        """The committed delta batches of ``name`` as one DataFrame, or
+        None when there are none. basePath roots partition discovery at
+        ``<name>_delta``: read as separate roots, two ``batch=N`` dirs
+        with ``bucket=`` subdirs fail with CONFLICTING_DIRECTORY_STRUCTURES.
+        The result carries an extra ``batch`` column; callers select
+        theirs."""
+        dirs = self.committed_delta_dirs(name)
+        if not dirs:
+            return None
+        return spark.read.option("basePath", self.path(f"{name}_delta")).parquet(*dirs)
+
     # --- json metadata ---
     def write_json(self, name: str, obj: dict) -> None:
         os.makedirs(self.dir, exist_ok=True)

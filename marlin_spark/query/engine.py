@@ -29,7 +29,11 @@ from pyspark.sql import functions as F
 from marlin_spark.config import EngineConfig
 from marlin_spark.index.catalog import IndexCatalog, term_bucket_py
 from marlin_spark.oracle.tokenizer import analyze
-from marlin_spark.query.wand import make_wand_scorer
+from marlin_spark.query.wand import (
+    SCORER_COLS,
+    SCORER_SCHEMA,
+    make_batch_wand_scorer,
+)
 
 DECODE_SCHEMA = "term string, docid long, tf int, dl int"
 
@@ -208,12 +212,11 @@ class SearchEngine:
         nothing) and df/idf of existing terms stay at base values until
         compaction — the standard NRT trade (segment visible, stats
         refreshed on commit)."""
-        deltas = self._delta_dirs("postings")
         # cache the assembled DataFrame keyed by the committed delta set:
         # spark.read.parquet lists files + reads a footer on the driver
         # (~90 ms), a fixed per-query cost. A new committed micro-batch
         # changes the key, so NRT visibility is unchanged.
-        key = ("postings_df", tuple(deltas))
+        key = ("postings_df", tuple(self._delta_dirs("postings")))
         cached = self._df_cache.get(key)
         if cached is not None:
             return cached
@@ -223,18 +226,17 @@ class SearchEngine:
             "n_docs", "sum_tf", "max_tfnorm", "postings", "positions", "bucket",
         ]
         base = base.select(*cols)
-        if deltas:
-            base = base.unionByName(
-                self.spark.read.parquet(*deltas).select(*cols)
-            )
+        deltas = self.cat.read_deltas(self.spark, "postings")
+        if deltas is not None:
+            base = base.unionByName(deltas.select(*cols))
         self._df_cache[key] = base
         return base
 
     def _docs_df(self, with_deleted: bool = False) -> DataFrame:
         base = self.cat.read(self.spark, "docs")
-        deltas = self._delta_dirs("docs")
-        if deltas:
-            dd = self.spark.read.parquet(*deltas).withColumn(
+        dd = self.cat.read_deltas(self.spark, "docs")
+        if dd is not None:
+            dd = dd.withColumn(
                 "range_id", (F.col("docid") / self.cfg.range_size).cast("int")
             )
             # column set, order AND types must match the base exactly
@@ -514,14 +516,31 @@ class SearchEngine:
     # exact path: full scoring through DataFrame ops (verification path &
     # filtered path)
     def _search_exact(self, plan: QueryPlan, filter_cond=None) -> DataFrame:
-        postings = self._decoded_postings(plan)
         meta = self.spark.createDataFrame(
-            [(t, float(i), int(s)) for t, (i, s) in plan.term_meta.items()],
-            "term string, idf double, slot int",
+            [
+                (t, float(i), int(s), plan.n_slots)
+                for t, (i, s) in plan.term_meta.items()
+            ],
+            "term string, idf double, slot int, n_slots int",
         )
+        scored = self._bm25(self._decoded_postings(plan), meta, plan.mode, [])
+        scored = self._not_deleted(scored)
+        if filter_cond is not None:
+            docs = self._docs_df().filter(filter_cond)
+            scored = scored.join(docs.select("docid"), "docid", "left_semi")
+        return self._rank(scored, plan.k)
+
+    def _bm25(
+        self, decoded: DataFrame, meta: DataFrame, mode: str, keys: list[str]
+    ) -> DataFrame:
+        """The DataFrame BM25 expression of the exact paths: decoded
+        (term, docid, tf, dl) rows join the broadcast per-term meta
+        (keys..., term, idf, slot, n_slots), term scores sum per
+        (keys..., docid) and, under mode='all', only docs that hit
+        n_slots distinct slots stay. Returns (keys..., docid, score)."""
         k1, b = self.cfg.k1, self.cfg.b
         scored = (
-            postings.join(F.broadcast(meta), "term")
+            decoded.join(F.broadcast(meta), "term")
             .withColumn(
                 "tscore",
                 F.col("idf")
@@ -532,24 +551,28 @@ class SearchEngine:
                     + k1 * (1.0 - b + b * F.col("dl") / float(self.avgdl))
                 ),
             )
-            .groupBy("docid")
+            .groupBy(*keys, "docid")
             .agg(
                 F.sum("tscore").alias("score"),
-                F.countDistinct("slot").alias("n_slots"),
+                F.countDistinct("slot").alias("got_slots"),
+                F.first("n_slots").alias("n_slots"),
             )
         )
-        if plan.mode == "all":
-            scored = scored.filter(F.col("n_slots") >= plan.n_slots)
-        scored = scored.drop("n_slots")
-        scored = self._not_deleted(scored)
-        if filter_cond is not None:
-            docs = self._docs_df().filter(filter_cond)
-            scored = scored.join(docs.select("docid"), "docid", "left_semi")
-        return self._rank(scored, plan.k)
+        if mode == "all":
+            scored = scored.filter(F.col("got_slots") >= F.col("n_slots"))
+        return scored.drop("got_slots", "n_slots")
 
     def _decoded_postings(self, plan: QueryPlan) -> DataFrame:
         blocks = self._matched_blocks(plan).select("term", "postings")
         return blocks.mapInPandas(_decode_blocks, DECODE_SCHEMA)
+
+    def _one_query_scorer(self, plan: QueryPlan, counters: dict | None = None):
+        """The top-k scorer run as a batch of one query."""
+        return make_batch_wand_scorer(
+            {"q": plan.term_meta}, {"q": plan.n_slots}, plan.k, plan.mode,
+            self.cfg.k1, self.cfg.b, self.avgdl,
+            deleted=self.deleted, counters=counters,
+        )
 
     # WAND path
     def _search_wand(self, plan: QueryPlan) -> DataFrame:
@@ -559,23 +582,12 @@ class SearchEngine:
             "ranges_scored": sc.accumulator(0),
         }
         self._last_wand_counters = acc
-        blocks = self._matched_blocks(plan).select(
-            "term", "range_id", "block_id", "n_docs", "max_tfnorm", "postings"
-        )
+        blocks = self._matched_blocks(plan).select(*SCORER_COLS)
         n_part = self._scorer_partitions()
-        scorer = make_wand_scorer(
-            plan.term_meta,
-            plan.k,
-            plan.n_slots,
-            plan.mode,
-            self.cfg.k1,
-            self.cfg.b,
-            self.avgdl,
-            acc,
-            deleted=self.deleted,
-        )
-        local = blocks.repartition(n_part, "range_id").mapInPandas(
-            scorer, "docid long, score double"
+        local = (
+            blocks.repartition(n_part, "range_id")
+            .mapInPandas(self._one_query_scorer(plan, acc), SCORER_SCHEMA)
+            .drop("query_id")
         )
         return self._rank(local, plan.k)
 
@@ -682,10 +694,9 @@ class SearchEngine:
             from marlin_spark.index.prefix_accel import accel_docids_df
 
             parts.append(accel_docids_df(self.spark, self.cat, short))
-            deltas = self._delta_dirs("postings")
-            if deltas:
+            if self._delta_dirs("postings"):
                 # NRT segments not yet folded into the accelerator
-                parts.append(self._delta_prefix_docids(deltas, short))
+                parts.append(self._delta_prefix_docids(short))
         if exact or rest:
             rows = self._dictionary_lookup(exact, rest)
             matched = [r["term"] for r in rows]
@@ -714,7 +725,7 @@ class SearchEngine:
             docids = docids.unionByName(p)
         return self._not_deleted(docids.distinct())
 
-    def _delta_prefix_docids(self, deltas: list[str], prefixes: list[str]) -> DataFrame:
+    def _delta_prefix_docids(self, prefixes: list[str]) -> DataFrame:
         """Docids of delta-segment terms matching any short prefix (the
         segments are small between compactions; compact() rebuilds the
         accelerator)."""
@@ -723,7 +734,7 @@ class SearchEngine:
             c = F.col("term").startswith(p)
             cond = c if cond is None else (cond | c)
         blocks = (
-            self.spark.read.parquet(*deltas)
+            self.cat.read_deltas(self.spark, "postings")
             .filter(cond)
             .select("term", "postings")
         )
@@ -744,8 +755,6 @@ class SearchEngine:
             df = self.search(q, k, mode, prefix_last)
             return [(r["docid"], r["score"]) for r in df.collect()]
         return self._local_topk(plan)
-
-    _LOCAL_COLS = ["term", "range_id", "block_id", "n_docs", "max_tfnorm", "postings"]
 
     def _arrow_dataset(self, key: str, path: str):
         """Memoized pyarrow dataset (file discovery + schema) per stats
@@ -777,11 +786,11 @@ class SearchEngine:
             tbl = self._arrow_dataset(
                 "postings", self.cat.path("postings")
             ).to_table(
-                columns=self._LOCAL_COLS,
+                columns=SCORER_COLS,
                 filter=pads.field("bucket") == bucket,
             ).sort_by(
                 [("term", "ascending"), ("range_id", "ascending"),
-                 ("block_id", "ascending")]
+                 ("first_docid", "ascending")]
             )
             spans: dict[str, tuple[int, int]] = {}
             terms = tbl["term"].to_pylist()
@@ -803,8 +812,6 @@ class SearchEngine:
 
     def _local_topk(self, plan: QueryPlan) -> list[tuple[int, float]]:
         import pyarrow.dataset as pads
-
-        from marlin_spark.query.wand import make_wand_scorer
 
         terms = list(plan.term_meta)
         buckets = sorted(
@@ -830,26 +837,10 @@ class SearchEngine:
                     pads.dataset(
                         d, partitioning="hive", format="parquet"
                     ).to_table(
-                        columns=self._LOCAL_COLS, filter=flt
+                        columns=SCORER_COLS, filter=flt
                     ).to_pandas()
                 )
-        if len(pdfs) == 1:
-            pdf = pdfs[0]
-        elif pdfs:
-            pdf = pd.concat(pdfs, ignore_index=True)
-        else:
-            pdf = pd.DataFrame(columns=self._LOCAL_COLS)
-        scorer = make_wand_scorer(
-            plan.term_meta,
-            plan.k,
-            plan.n_slots,
-            plan.mode,
-            self.cfg.k1,
-            self.cfg.b,
-            self.avgdl,
-            deleted=self.deleted,
-        )
-        out = next(scorer(iter([pdf])))
+        out = next(self._one_query_scorer(plan)(iter(pdfs)))
         ranked = sorted(
             zip(out["docid"], out["score"]),
             key=lambda ds: (-round(float(ds[1]), 9), int(ds[0])),
@@ -1310,8 +1301,6 @@ class SearchEngine:
             # evict live docs; the exact batch path anti-joins correctly
             self._check_tombstone_pressure()
             return self.search_many(queries, k, mode)
-        from marlin_spark.query.wand import make_batch_wand_scorer
-
         per_q = {qid: self.analyze_query(q) for qid, q in queries.items()}
         all_terms = sorted({t for ts in per_q.values() for t in ts})
         dict_rows = self._dictionary_lookup(all_terms, [])
@@ -1363,7 +1352,7 @@ class SearchEngine:
         blocks = (
             self._postings_df()
             .filter(_in_pred("bucket", buckets) & _in_pred("term", matched))
-            .select("term", "range_id", "block_id", "n_docs", "max_tfnorm", "postings")
+            .select(*SCORER_COLS)
         )
         n_part = self._scorer_partitions()
         seeds = self._theta_seeds(metas, k, kth_of, mode)
@@ -1372,7 +1361,7 @@ class SearchEngine:
             deleted=self.deleted, theta_seed=seeds,
         )
         local = blocks.repartition(n_part, "range_id").mapInPandas(
-            scorer, "query_id string, docid long, score double"
+            scorer, SCORER_SCHEMA
         )
         w = Window.partitionBy("query_id").orderBy(
             F.desc(F.round("score", 9)), F.asc("docid")
@@ -1451,29 +1440,7 @@ class SearchEngine:
         decoded = posts.select("term", "postings").mapInPandas(
             _decode_blocks, DECODE_SCHEMA
         )
-        decoded = self._not_deleted(decoded)
-        k1, b = self.cfg.k1, self.cfg.b
-        scored = (
-            decoded.join(F.broadcast(meta), "term")
-            .withColumn(
-                "tscore",
-                F.col("idf")
-                * F.col("tf")
-                * (k1 + 1.0)
-                / (
-                    F.col("tf")
-                    + k1 * (1.0 - b + b * F.col("dl") / float(self.avgdl))
-                ),
-            )
-            .groupBy("query_id", "docid")
-            .agg(
-                F.sum("tscore").alias("score"),
-                F.countDistinct("slot").alias("got_slots"),
-                F.first("n_slots").alias("n_slots"),
-            )
-        )
-        if mode == "all":
-            scored = scored.filter(F.col("got_slots") >= F.col("n_slots"))
+        scored = self._bm25(self._not_deleted(decoded), meta, mode, ["query_id"])
         w = Window.partitionBy("query_id").orderBy(
             F.desc(F.round("score", 9)), F.asc("docid")
         )

@@ -1,27 +1,42 @@
-"""Block-max WAND top-k scorer over compressed posting blocks.
+"""Top-k BM25 scorer over compressed posting blocks.
 
-Runs as mapInPandas over matched block rows repartitioned by doc range
-(range_id). Within a partition, ranges are processed in descending
-upper-bound order with the top-k threshold THETA carried across ranges:
+One numpy kernel answers every top-k path: ``search`` (WAND) and
+``search_local`` run it as a batch of one query, ``search_many_wand``
+with a whole batch. It runs as mapInPandas over the matched block rows
+repartitioned by doc range (range_id), or on the driver for the local
+path. Each block is decoded once per range, and the decoded arrays are
+shared by every query that uses its term. Ranges are visited in
+descending upper-bound order, so each query's running top-k threshold
+THETA rises fast. Every pruning layer is exact:
 
-- range upper bound = sum over query terms of idf * max(block max_tfnorm
-  in range): if ub <= THETA the WHOLE range (all its blocks, all terms) is
-  skipped without decoding — this is block-max pruning at doc-range
-  granularity, which is *sound for exact scores*: a pruned range cannot
-  contain a top-k doc, and no surviving doc ever loses a term
-  contribution (pruning single blocks of one term would silently corrupt
-  scores of docs that other terms still emit — the classic per-block WAND
-  pivot needs doc-at-a-time cursors, a scalar loop that belongs in native
-  code, not in a Python executor).
-- surviving ranges decode (docids, tfs, dls) — the positions column is
-  never read (parquet column pruning) — and score fully vectorized:
-  per-term scores concatenated, stable-argsorted by docid (terms iterate
-  in sorted order => accumulation order matches the oracle), summed with
-  np.add.reduceat.
+- range level (block-max): a query's bound in a range is the sum over its
+  terms of idf * (largest block max_tfnorm of the term in the range). A
+  range whose bound cannot beat THETA is skipped without decoding. A
+  range holds all postings of its docs, so a skipped range cannot hold a
+  top-k doc and no scored doc loses a term contribution (skipping single
+  blocks of one term would corrupt the scores other terms still emit).
+- term level (MaxScore, Turtle & Flood 1995): inside a range, the
+  query's lowest-bound terms whose bounds sum to less than THETA are
+  non-essential. Candidates come only from the essential terms; the
+  non-essential terms' exact contributions are gathered by binary search
+  into their sorted decoded docids.
+- candidate level: scored candidates below THETA - 2e-9 are dropped
+  before the top-k merge (2e-9 is wider than one 9-decimal rounding step,
+  so no rounded-tie winner is lost).
+
+mode='all' keeps a candidate only if it hits every required slot. A slot
+is one query word, and the prefix expansions of the typed last word share
+its slot, so coverage ORs one hit mask per slot and counts the slots,
+not the hitting terms.
+
+Decoding reads (docids, tfs, dls); the positions column is never read
+(parquet column pruning). A candidate's score accumulates term-ascending
+(0.0 + t1 + t2 + ...; 0.0 + x == x in IEEE), the oracle's term-sorted
+sum order.
 
 Reference analog: the fast-rank partial scan + early termination
-(/root/reference/src/main/docrank.c:478-574); ours prunes with provable
-score bounds instead of sampling.
+(reference src/main/docrank.c:478-574); ours prunes with provable score
+bounds instead of sampling.
 """
 
 from __future__ import annotations
@@ -34,6 +49,10 @@ import pandas as pd
 from marlin_spark.functions.codec import decode_blocks_many
 
 _EPS = 1e-9
+
+# block columns the scorer reads
+SCORER_COLS = ["term", "range_id", "first_docid", "n_docs", "max_tfnorm", "postings"]
+SCORER_SCHEMA = "query_id string, docid long, score double"
 
 
 def _mask_deleted(docids: np.ndarray, deleted: np.ndarray | None) -> np.ndarray | None:
@@ -50,124 +69,20 @@ def _mask_deleted(docids: np.ndarray, deleted: np.ndarray | None) -> np.ndarray 
     return ~hit
 
 
-def make_wand_scorer(
-    term_meta: dict[str, tuple[float, int]],
-    k: int,
-    n_slots: int,
-    mode: str = "any",
-    k1: float = 1.2,
-    b: float = 0.75,
-    avgdl: float = 1.0,
-    counters: dict | None = None,
-    deleted: "np.ndarray | None" = None,
-) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
-    """term_meta: term -> (idf, slot). Slots group prefix expansions with
-    their source word for conjunctive (mode='all') matching; n_slots is
-    the number of required slots. ``deleted``: sorted int64 tombstone
-    docids, masked out right after block decode so a deleted doc can
-    neither score nor occupy a top-k slot (block-max values stay valid
-    upper bounds — they bound a superset)."""
+def _empty() -> pd.DataFrame:
+    return pd.DataFrame(
+        {
+            "query_id": pd.Series([], dtype="object"),
+            "docid": pd.Series([], dtype="int64"),
+            "score": pd.Series([], dtype="float64"),
+        }
+    )
 
-    norm_c = k1 * (1.0 - b)
-    norm_s = k1 * b / avgdl if avgdl > 0 else 0.0
-    acc = counters or {}
 
-    def scorer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = [pdf for pdf in batches if not pdf.empty]
-        if not rows:
-            yield pd.DataFrame({"docid": pd.Series([], dtype="int64"),
-                                "score": pd.Series([], dtype="float64")})
-            return
-        all_blocks = pd.concat(rows, ignore_index=True)
-
-        # group blocks by range, compute each range's upper bound
-        ranges: dict[int, list] = {}
-        for t in all_blocks.itertuples(index=False):
-            ranges.setdefault(t.range_id, []).append(t)
-        ubs = []
-        for rid, blks in ranges.items():
-            per_term_max: dict[str, float] = {}
-            for blk in blks:
-                idf = term_meta[blk.term][0]
-                v = idf * blk.max_tfnorm
-                if v > per_term_max.get(blk.term, -1.0):
-                    per_term_max[blk.term] = v
-            ubs.append((sum(per_term_max.values()), rid))
-        ubs.sort(reverse=True)
-
-        top_d = np.empty(0, dtype=np.int64)
-        top_s = np.empty(0, dtype=np.float64)
-        theta = -np.inf
-        skipped = 0
-
-        for ub, rid in ubs:
-            # strict: a range whose bound EQUALS theta can still hold an
-            # equal-score doc that wins the docid tie-break
-            if top_d.size >= k and ub < theta - _EPS:
-                skipped += 1
-                continue
-            # decode the WHOLE range in one varbyte pass (terms sorted ->
-            # accumulation order matches the oracle); per-block decode_block
-            # calls were ~50 us of numpy overhead each, the dominant cost
-            # of the driver-local path at 100+ blocks per head-term query
-            blks = sorted(ranges[rid], key=lambda t: (t.term, t.block_id))
-            nb = len(blks)
-            nd = np.fromiter((b_.n_docs for b_ in blks), np.int64, nb)
-            d, tfs, dls, _ = decode_blocks_many(
-                [b_.postings for b_ in blks], nd
-            )
-            s = np.repeat(
-                np.fromiter((term_meta[b_.term][0] for b_ in blks), np.float64, nb),
-                nd,
-            )
-            slots_all = np.repeat(
-                np.fromiter((term_meta[b_.term][1] for b_ in blks), np.int64, nb),
-                nd,
-            )
-            keep = _mask_deleted(d, deleted)
-            if keep is not None:
-                d, tfs, dls = d[keep], tfs[keep], dls[keep]
-                s, slots_all = s[keep], slots_all[keep]
-            if d.size == 0:  # every posting in the range was tombstoned
-                continue
-            tfn = tfs.astype(np.float64)
-            s = s * tfn * (k1 + 1.0) / (
-                tfn + norm_c + norm_s * dls.astype(np.float64)
-            )
-            order = np.argsort(d, kind="stable")
-            d, s = d[order], s[order]
-            starts = np.flatnonzero(np.diff(d, prepend=-1))
-            scores = np.add.reduceat(s, starts)
-            u_docids = d[starts]
-            if mode == "all" and n_slots > 0:
-                slots = slots_all[order]
-                # distinct slots per doc: sort (doc, slot) pairs
-                key = d * (n_slots + 1) + slots
-                uniq = np.unique(key)
-                cnt = np.bincount(
-                    np.searchsorted(u_docids, uniq // (n_slots + 1)),
-                    minlength=u_docids.shape[0],
-                )
-                keep = cnt >= n_slots
-                u_docids, scores = u_docids[keep], scores[keep]
-            if u_docids.size == 0:
-                continue
-            top_d = np.concatenate([top_d, u_docids])
-            top_s = np.concatenate([top_s, scores])
-            if top_d.size > k:
-                # same comparator as the global merge: rounded score desc,
-                # docid asc — keeps partition-local and global top-k
-                # selections consistent under ties
-                order = np.lexsort((top_d, -np.round(top_s, 9)))[:k]
-                top_d, top_s = top_d[order], top_s[order]
-            if top_d.size >= k:
-                theta = top_s.min()
-        if acc:
-            acc["ranges_skipped"].add(skipped)
-            acc["ranges_scored"].add(len(ubs) - skipped)
-        yield pd.DataFrame({"docid": top_d, "score": top_s})
-
-    return scorer
+def _column(rows: list, name: str) -> np.ndarray:
+    if len(rows) == 1:
+        return rows[0][name].to_numpy()
+    return np.concatenate([pdf[name].to_numpy() for pdf in rows])
 
 
 def _topk_trim(d: np.ndarray, s: np.ndarray, k: int):
@@ -197,30 +112,16 @@ def make_batch_wand_scorer(
     avgdl: float = 1.0,
     deleted: "np.ndarray | None" = None,
     theta_seed: "dict[str, float] | None" = None,
+    counters: dict | None = None,
 ) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
-    """Batched WAND: scores MANY queries in one pass over the matched
-    blocks of their term union. Each block is decoded ONCE per range and
-    the decoded (docids, core) arrays are shared by every query that
-    references the term. Three pruning layers, all exact:
+    """Top-k scorer for the queries in ``query_metas`` (query id -> term
+    -> (idf, slot)) over block rows with the SCORER_COLS columns; yields
+    (query_id, docid, score) rows, at most k per query.
 
-    - range level (block-max): a query skips a whole range when its
-      upper bound there cannot beat its running theta (vectorized for
-      all queries at once via bincount over term->query incidence);
-    - term level (MaxScore, Turtle & Flood 1995): within a range, terms
-      are split per query into essential / non-essential by cumulative
-      upper bound against theta — candidate docs come ONLY from
-      essential postings; non-essential terms cannot lift a doc that
-      appears in none of the essential lists above theta, but their
-      exact contributions to surviving candidates are gathered by
-      binary search into the term's (sorted) decoded docids;
-    - candidate level: scored candidates below theta - 2e-9 are dropped
-      before the top-k merge (2e-9 > one 9-decimal rounding step, so no
-      rounded-tie winner is lost).
-
-    Float exactness: every candidate's score accumulates term-ascending
-    (zeros + t1 + t2 + ...; 0.0 + x == x in IEEE), the same order as the
-    single-query scorer's stable argsort + reduceat and the oracle's
-    term-sorted GROUP BY sum.
+    ``n_slots``: per query, the number of slots a doc must hit under
+    mode='all'. ``deleted``: sorted int64 tombstone docids, masked out
+    right after decode so a deleted doc can neither score nor hold a
+    top-k place (block maxes stay valid bounds: they bound a superset).
 
     ``theta_seed``: optional per-query GLOBAL lower bounds on the final
     k-th best score (see SearchEngine._theta_seeds for the derivation
@@ -232,9 +133,9 @@ def make_batch_wand_scorer(
     unaffected because no doc with score >= the true k-th best (rounding
     ties included, via the eps guards) is ever dropped.
 
-    Reference analog: fast-rank early termination
-    (/root/reference/src/main/docrank.c:478-574), upgraded from sampling
-    to provable bounds.
+    ``counters``: optional ``ranges_scored`` / ``ranges_skipped``
+    accumulators, counted per (query, range) where the query's bound in
+    the range is positive.
     """
     norm_c = k1 * (1.0 - b)
     norm_s = k1 * b / avgdl if avgdl > 0 else 0.0
@@ -248,7 +149,7 @@ def make_batch_wand_scorer(
             qc = qcode_of.get(qid)
             if qc is not None:
                 seed_arr[qc] = sv
-    # per-query: terms ascending with aligned idf/slot arrays
+    # per-query: terms ascending with their idf and slot
     q_terms: list[list] = [None] * nq
     ns_arr = np.zeros(nq, np.int64)
     for qid, meta in query_metas.items():
@@ -270,38 +171,32 @@ def make_batch_wand_scorer(
         )
 
     def scorer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        empty = pd.DataFrame(
-            {
-                "query_id": pd.Series([], dtype="object"),
-                "docid": pd.Series([], dtype="int64"),
-                "score": pd.Series([], dtype="float64"),
-            }
-        )
         rows = [pdf for pdf in batches if not pdf.empty]
         if not rows:
-            yield empty
+            yield _empty()
             return
-        blk = pd.concat(rows, ignore_index=True) if len(rows) > 1 else rows[0]
-        blk = blk.sort_values(
-            ["range_id", "term", "block_id"], kind="mergesort",
-            ignore_index=True,
-        )
-        rid_a = blk["range_id"].to_numpy()
-        term_a = blk["term"].to_numpy()
-        nd_a = blk["n_docs"].to_numpy()
-        mtf_a = blk["max_tfnorm"].to_numpy(dtype=np.float64)
-        posts_a = blk["postings"].to_numpy()
+        # order blocks by (range, term, first docid): a term's blocks in
+        # a range then decode to ascending docids, also where a streaming
+        # delta's blocks share the range with the base segment
+        terms_u, tcode = np.unique(_column(rows, "term"), return_inverse=True)
+        rid_a = _column(rows, "range_id")
+        o = np.lexsort((_column(rows, "first_docid"), tcode, rid_a))
+        rid_a, tcode = rid_a[o], tcode[o]
+        nd_a = _column(rows, "n_docs")[o]
+        mtf_a = _column(rows, "max_tfnorm").astype(np.float64, copy=False)[o]
+        posts_a = _column(rows, "postings")[o]
         n_blk = rid_a.size
         r_change = np.r_[True, rid_a[1:] != rid_a[:-1]]
-        t_change = r_change | np.r_[True, term_a[1:] != term_a[:-1]]
+        t_change = r_change | np.r_[True, tcode[1:] != tcode[:-1]]
         t_starts = np.flatnonzero(t_change)
         tmax_all = np.maximum.reduceat(mtf_a, t_starts)  # per (range,term)
-        term_of_slot = term_a[t_starts]
+        code_of_slot = tcode[t_starts]
         slot_range = rid_a[t_starts]
         rs_starts = np.flatnonzero(np.r_[True, slot_range[1:] != slot_range[:-1]])
         rs_ends = np.r_[rs_starts[1:], t_starts.size]
         r_starts_blk = np.flatnonzero(r_change)
         r_ends_blk = np.r_[r_starts_blk[1:], n_blk]
+        bt = [by_term[t] for t in terms_u]
         # descending total-ub order so thetas rise fast
         order = np.argsort(
             -np.add.reduceat(tmax_all, rs_starts), kind="stable"
@@ -310,33 +205,34 @@ def make_batch_wand_scorer(
         state_d: list = [None] * nq  # per-query running top-k
         state_s: list = [None] * nq
         theta = np.full(nq, -np.inf)
+        n_scored = n_skipped = 0
 
         for ri in order:
             s_lo, s_hi = rs_starts[ri], rs_ends[ri]
-            terms_r = term_of_slot[s_lo:s_hi]
+            codes_r = code_of_slot[s_lo:s_hi]
             tmax_r = tmax_all[s_lo:s_hi]
             # vectorized per-query range bound: ub[q] = sum idf*tmax
-            qparts, cparts = [], []
-            for i in range(terms_r.size):
-                e = by_term[terms_r[i]]
-                qparts.append(e[0])
-                cparts.append(e[1] * tmax_r[i])
             ub = np.bincount(
-                np.concatenate(qparts), weights=np.concatenate(cparts),
+                np.concatenate([bt[c][0] for c in codes_r]),
+                weights=np.concatenate(
+                    [bt[c][1] * tmax_r[i] for i, c in enumerate(codes_r)]
+                ),
                 minlength=nq,
             )
             # theta[qc] is -inf until that query holds k docs; a global
             # seed prunes even before then (it bounds the FINAL k-th)
             th_eff = np.maximum(theta, seed_arr)
-            active = (ub > 0) & (ub >= th_eff - _EPS)
-            if not active.any():
+            bounded = ub > 0
+            active = bounded & (ub >= th_eff - _EPS)
+            n_active = int(active.sum())
+            n_scored += n_active
+            n_skipped += int(bounded.sum()) - n_active
+            if not n_active:
                 continue
             needed = np.fromiter(
-                (active[by_term[t][0]].any() for t in terms_r),
-                bool, terms_r.size,
+                (active[bt[c][0]].any() for c in codes_r),
+                bool, codes_r.size,
             )
-            if not needed.any():
-                continue
             # decode every needed term's blocks in one varbyte pass
             rel_t = t_starts[s_lo:s_hi] - r_starts_blk[ri]
             t_cnt = np.diff(np.r_[rel_t, r_ends_blk[ri] - r_starts_blk[ri]])
@@ -354,24 +250,23 @@ def make_batch_wand_scorer(
                 tfn + norm_c + norm_s * dl_all.astype(np.float64)
             )
             decoded: dict[str, tuple] = {}
+            tmax_d: dict[str, float] = {}
             tdoc = np.concatenate(([0], np.cumsum(nd_kept)))
-            cnt_kept = t_cnt[needed]
-            pos = 0
             blk_i = 0
             for ti in np.flatnonzero(needed):
-                nb_t = cnt_kept[pos]
+                nb_t = t_cnt[ti]
                 lo, hi = tdoc[blk_i], tdoc[blk_i + nb_t]
+                blk_i += nb_t
                 d_t, c_t = d_all[lo:hi], core_all[lo:hi]
                 if kmask is not None:
                     kk = kmask[lo:hi]
                     d_t, c_t = d_t[kk], c_t[kk]
                 if d_t.size:
-                    decoded[terms_r[ti]] = (d_t, c_t)
-                pos += 1
-                blk_i += nb_t
+                    t = terms_u[codes_r[ti]]
+                    decoded[t] = (d_t, c_t)
+                    tmax_d[t] = tmax_r[ti]
             if not decoded:
                 continue
-            tmax_d = {terms_r[i]: tmax_r[i] for i in range(terms_r.size)}
             for qc in np.flatnonzero(active):
                 present = [
                     (t, idf, slot)
@@ -380,14 +275,14 @@ def make_batch_wand_scorer(
                 ]
                 if not present:
                     continue
+                if want_slots and len({s for _, _, s in present}) < ns_arr[qc]:
+                    continue  # no doc in this range can hit every slot
                 th = th_eff[qc]
                 if len(present) == 1:
-                    t, idf, slot = present[0]
+                    t, idf, _slot = present[0]
                     d_t, c_t = decoded[t]
                     cand_d = d_t
                     cand_s = idf * c_t
-                    if want_slots and ns_arr[qc] > 1:
-                        continue  # one distinct slot can never reach ns
                 else:
                     # MaxScore split: largest LOW-bound prefix whose
                     # cumulative upper bound stays under theta is
@@ -414,34 +309,28 @@ def make_batch_wand_scorer(
                                 [decoded[present[i][0]][0] for i in ess]
                             )
                         )
-                    if cand_d.size == 0:
-                        continue
                     cand_s = np.zeros(cand_d.size)
-                    # every entry of `present` carries a DISTINCT slot
-                    # (slots are enumerate() positions and the meta dict
-                    # is keyed by term), so distinct-slot coverage is
-                    # simply the count of hitting terms — exact for any
-                    # query length (a 64-bit mask aliased slots >= 64,
-                    # silently zeroing long conjunctive queries)
-                    slot_cnt = (
-                        np.zeros(cand_d.size, np.int32) if want_slots else None
-                    )
+                    # slot -> hit mask over cand_d; prefix expansions
+                    # share a slot, so their masks OR together
+                    slot_hit: dict[int, np.ndarray] = {}
                     only_ess = len(ess) == 1
                     for i, (t, idf, slot) in enumerate(present):
                         d_t, c_t = decoded[t]
                         if only_ess and i == ess[0]:
                             cand_s += idf * c_t  # aligned: cand_d IS d_t
-                            if slot_cnt is not None:
-                                slot_cnt += 1
-                            continue
-                        p = np.searchsorted(d_t, cand_d)
-                        p[p >= d_t.size] = d_t.size - 1
-                        hit = d_t[p] == cand_d
-                        cand_s[hit] += idf * c_t[p[hit]]
-                        if slot_cnt is not None:
-                            slot_cnt[hit] += 1
+                            hit = None
+                        else:
+                            p = np.searchsorted(d_t, cand_d)
+                            p[p >= d_t.size] = d_t.size - 1
+                            hit = d_t[p] == cand_d
+                            cand_s[hit] += idf * c_t[p[hit]]
+                        if want_slots:
+                            if hit is None:
+                                hit = np.ones(cand_d.size, bool)
+                            prev = slot_hit.get(slot)
+                            slot_hit[slot] = hit if prev is None else prev | hit
                     if want_slots:
-                        okm = slot_cnt >= ns_arr[qc]
+                        okm = np.sum(list(slot_hit.values()), axis=0) >= ns_arr[qc]
                         cand_d, cand_s = cand_d[okm], cand_s[okm]
                         if cand_d.size == 0:
                             continue
@@ -458,20 +347,21 @@ def make_batch_wand_scorer(
                 state_d[qc], state_s[qc] = cand_d, cand_s
                 if cand_d.size >= k:
                     theta[qc] = cand_s.min()
-        out_q, out_d, out_s = [], [], []
-        for qc in range(nq):
-            if state_d[qc] is not None and state_d[qc].size:
-                out_q.extend([qid_list[qc]] * state_d[qc].size)
-                out_d.append(state_d[qc])
-                out_s.append(state_s[qc])
-        if not out_q:
-            yield empty
+        if counters:
+            counters["ranges_scored"].add(n_scored)
+            counters["ranges_skipped"].add(n_skipped)
+        out = [qc for qc in range(nq) if state_d[qc] is not None]
+        if not out:
+            yield _empty()
             return
         yield pd.DataFrame(
             {
-                "query_id": out_q,
-                "docid": np.concatenate(out_d),
-                "score": np.concatenate(out_s),
+                "query_id": np.repeat(
+                    np.array([qid_list[qc] for qc in out], dtype=object),
+                    [state_d[qc].size for qc in out],
+                ),
+                "docid": np.concatenate([state_d[qc] for qc in out]),
+                "score": np.concatenate([state_s[qc] for qc in out]),
             }
         )
 

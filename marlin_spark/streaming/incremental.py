@@ -250,9 +250,9 @@ class IncrementalIndexer:
     # ------------------------------------------------------------------
     def _all_docs(self) -> DataFrame:
         base = self.cat.read(self.spark, "docs")
-        deltas = self.cat.committed_delta_dirs("docs")
-        if deltas:
-            dd = self.spark.read.parquet(*deltas).withColumn(
+        dd = self.cat.read_deltas(self.spark, "docs")
+        if dd is not None:
+            dd = dd.withColumn(
                 "range_id", (F.col("docid") / self.cfg.range_size).cast("int")
             )
             base = base.unionByName(
@@ -314,7 +314,7 @@ class IncrementalIndexer:
         docs = self.cat.read(self.spark, "docs")
         base_schema = docs.schema
         if doc_deltas:
-            dd = self.spark.read.parquet(*doc_deltas).withColumn(
+            dd = self.cat.read_deltas(self.spark, "docs").withColumn(
                 "range_id", (F.col("docid") / self.cfg.range_size).cast("int")
             )
             # delta columns must match the base EXACTLY (set, order AND
@@ -350,7 +350,7 @@ class IncrementalIndexer:
             base = base.drop("rgroup")
         merged = base.select(*_POSTING_COLS)
         if delta_dirs:
-            deltas = self.spark.read.parquet(*delta_dirs).select(*_POSTING_COLS)
+            deltas = self.cat.read_deltas(self.spark, "postings").select(*_POSTING_COLS)
             merged = merged.unionByName(deltas)
         rewriter = make_compaction_rewriter(
             self.cfg.k1, self.cfg.b, new_avgdl, self.cfg.block_size, tomb

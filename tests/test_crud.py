@@ -54,6 +54,50 @@ def test_streamed_turns_visible_before_compaction(spark, crud_index):
     assert local_ids == exact_ids
 
 
+
+def _ranks(df):
+    return [(r["docid"], round(r["score"], 6)) for r in df.collect()]
+
+
+def test_two_deltas_search_and_compact(spark, crud_index, tiny_rows):
+    """Two committed micro-batches are read together by every search
+    path and by compact(). Before compaction the paths agree and see the
+    streamed turns (batch 0 shares doc range 0 with the base, so a
+    term's base and delta blocks interleave by block_id); after it they
+    rank like an oracle over base + streamed turns with the same docids."""
+    d, cfg = crud_index
+    inc = IncrementalIndexer(spark, d, cfg)
+    base = int(inc.stats.get("max_docid", inc.stats["n_docs"]))
+    capacity = int(inc.stats.get("batch_capacity", cfg.batch_capacity))
+    texts = ["bi lefu ta", "bi de worst", "lefu this best", "ta bi bi", "worst test lefu"]
+    streamed = []
+    for batch_id in (0, 1):
+        rows = [(f"zz-delta-{batch_id}", i, "user", t, None) for i, t in enumerate(texts)]
+        inc.process_batch(_batch(spark, rows), batch_id)
+        streamed += [
+            (base + batch_id * capacity + i + 1, t) for i, t in enumerate(texts)
+        ]
+    queries = ["bi lefu", "worst", "ta de bi", "this best"]
+
+    eng = SearchEngine(spark, d, cfg)
+    for q in queries:
+        wand = _ranks(eng.search(q, k=10, use_wand=True))
+        exact = _ranks(eng.search(q, k=10, use_wand=False))
+        local = [(doc, round(s, 6)) for doc, s in eng.search_local(q, k=10)]
+        assert wand == exact == local, q
+    hits = {r["docid"] for r in eng.search("bi lefu", k=1000).collect()}
+    assert {doc for doc, t in streamed if {"bi", "lefu"} & set(t.split())} <= hits
+
+    inc.compact()
+    oracle = OracleIndex(assign_docids(tiny_rows) + streamed)
+    eng = SearchEngine(spark, d, cfg)
+    for q in queries:
+        want = [(doc, round(s, 6)) for doc, s in oracle.search(q, k=10)]
+        for wand in (True, False):
+            assert _ranks(eng.search(q, k=10, use_wand=wand)) == want, (q, wand)
+        local = [(doc, round(s, 6)) for doc, s in eng.search_local(q, k=10)]
+        assert local == want, q
+
 def test_delete_excludes_doc_from_every_path(spark, crud_index, tiny_oracle):
     d, cfg = crud_index
     eng0 = SearchEngine(spark, d, cfg)

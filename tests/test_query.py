@@ -49,12 +49,31 @@ def test_rank_identity_wand_path(engine, tiny_oracle, q):
     assert _spark_ranks(engine, q, wand=True) == _oracle_ranks(tiny_oracle, q)
 
 
-@pytest.mark.parametrize("q", ["this best", "aaaa bbbb cccc", "best worst"])
+def _two_expansion_docs(tiny_oracle, prefix, other):
+    """Docs holding two or more expansions of ``prefix`` but not ``other``."""
+    hits: dict = {}
+    for t, plist in tiny_oracle.postings.items():
+        if t.startswith(prefix):
+            for d in plist:
+                hits[d] = hits.get(d, 0) + 1
+    return {d for d, n in hits.items() if n >= 2} - set(
+        tiny_oracle.postings.get(other, {})
+    )
+
+
+# "worst tes" / "this tes": a doc holds two tes* expansions but neither
+# other word, so under mode='all' + prefix_last it must fail the slot
+# check (slots are counted, not hitting terms)
+MODE_ALL_QUERIES = ["this best", "aaaa bbbb cccc", "best worst", "worst tes", "this tes"]
+
+
+@pytest.mark.parametrize("q", MODE_ALL_QUERIES)
 def test_rank_identity_mode_all(engine, tiny_oracle, q):
-    for wand in (False, True):
-        assert _spark_ranks(engine, q, mode="all", wand=wand) == _oracle_ranks(
-            tiny_oracle, q, mode="all"
-        )
+    for prefix in (False, True):
+        want = _oracle_ranks(tiny_oracle, q, mode="all", prefix=prefix)
+        for wand in (False, True):
+            got = _spark_ranks(engine, q, mode="all", prefix=prefix, wand=wand)
+            assert got == want, (prefix, wand)
 
 
 @pytest.mark.parametrize("q", ["tes", "aaa", "stat", "th", "worst tes", "this aaa"])
@@ -225,3 +244,50 @@ def test_local_fast_path_modes(engine, tiny_oracle):
         for d, s in engine.search_local("tes", k=10, prefix_last=True)
     ]
     assert got == _oracle_ranks(tiny_oracle, "tes", prefix=True)
+    for other in ("worst", "this"):
+        assert _two_expansion_docs(tiny_oracle, "tes", other)
+    for q in MODE_ALL_QUERIES:
+        got = [
+            (d, round(s, 6))
+            for d, s in engine.search_local(q, k=10, mode="all", prefix_last=True)
+        ]
+        assert got == _oracle_ranks(tiny_oracle, q, mode="all", prefix=True), q
+
+
+def _scored(blocks, metas, k=10):
+    import pandas as pd
+
+    from marlin_spark.query.wand import make_batch_wand_scorer
+
+    scorer = make_batch_wand_scorer(metas, {"q": len(metas["q"])}, k, avgdl=4.0)
+    out = next(scorer(iter([pd.DataFrame(blocks)])))
+    return sorted(zip(out["docid"].tolist(), out["score"].round(9).tolist()))
+
+
+def _block(term, docids, block_id):
+    import numpy as np
+
+    from marlin_spark.functions.codec import encode_block
+
+    d = np.asarray(docids, np.int64)
+    post, _ = encode_block(d, np.ones(d.size), np.full(d.size, 4), np.empty(0))
+    return {
+        "term": term, "range_id": 0, "block_id": block_id,
+        "first_docid": int(d[0]), "n_docs": int(d.size),
+        "max_tfnorm": 10.0, "postings": post,
+    }
+
+
+def test_scorer_gathers_interleaved_segment_blocks():
+    """A streaming delta's blocks can share a doc range with the base
+    segment and restart block_id at 0, so (term, block_id) order would
+    interleave the two segments' docids; the scorer must gather every
+    term contribution as if each term were one sorted block."""
+    metas = {"q": {"a": (1.0, 0), "b": (2.0, 1)}}
+    split = [
+        _block("a", [1, 2], 0), _block("a", [3, 4], 1),  # base segment
+        _block("a", [10, 11], 0),                          # delta segment
+        _block("b", [3, 10], 0),
+    ]
+    whole = [_block("a", [1, 2, 3, 4, 10, 11], 0), _block("b", [3, 10], 0)]
+    assert _scored(split, metas) == _scored(whole, metas)

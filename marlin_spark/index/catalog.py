@@ -253,11 +253,13 @@ class IndexCatalog:
 
     def read_deltas(self, spark: SparkSession, name: str) -> DataFrame | None:
         """The committed delta batches of ``name`` as one DataFrame, or
-        None when there are none. basePath roots partition discovery at
-        ``<name>_delta``: read as separate roots, two ``batch=N`` dirs
-        with ``bucket=`` subdirs fail with CONFLICTING_DIRECTORY_STRUCTURES.
-        The result carries an extra ``batch`` column; callers select
-        theirs."""
+        None when there are none. Each ``batch=N`` dir holds plain
+        parquet files (no ``bucket=`` subdirs: a postings delta keeps
+        ``bucket`` as a data column). basePath roots partition discovery
+        at ``<name>_delta``, so the result carries an extra ``batch``
+        column; callers select theirs. A batch dir written with
+        ``bucket=`` subdirs beside plain ones fails with
+        CONFLICTING_DIRECTORY_STRUCTURES: compact() such deltas first."""
         dirs = self.committed_delta_dirs(name)
         if not dirs:
             return None

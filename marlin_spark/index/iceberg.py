@@ -27,11 +27,12 @@ prefix_accel/fc=c/     table `<ns>.<index>_prefix_accel`
                         partition spec: identity(fc); sort order
                         (prefix, range_id)
 *_delta/batch=N/       Iceberg branch or staged snapshots: one
-                        snapshot per micro-batch; the dual-_SUCCESS
-                        visibility gate (catalog.committed_delta_dirs)
-                        becomes a SINGLE multi-table transaction (or
-                        one snapshot commit per table with the same
-                        batch watermark property)
+ (plain parquet; the    snapshot per micro-batch; the dual-_SUCCESS
+ postings delta is      visibility gate (catalog.committed_delta_dirs)
+ sorted by bucket,      becomes a SINGLE multi-table transaction (or
+ term, range_id,        one snapshot commit per table with the same
+ block_id; bucket is    batch watermark property)
+ a data column)
 stats.json             table properties / snapshot summary entries
 manifest/ _done marks  snapshot-per-stage: a build unit's overwrite
                         maps to `overwritePartitions` on its rgroup

@@ -8,8 +8,13 @@ index.c:965-1034). Here the same single-writer invariant maps to
 Structured Streaming's exactly-once foreachBatch plus an explicit
 maintenance API:
 
-- ADD: each micro-batch of new turns is tokenized and appended as a
-  DELTA SEGMENT (same block layout, tagged with the batch id). Queries
+- ADD: each micro-batch of new turns is appended as a DELTA SEGMENT
+  (same block layout, tagged with the batch id): its docs delta is
+  written first, then read back, repartitioned by doc range and built
+  by the base build's make_doc_range_builder (no token shuffle), and
+  written as one unpartitioned postings parquet with ``bucket`` as a
+  data column. The dual-_SUCCESS gate (catalog.committed_delta_dirs)
+  keeps a half-written batch invisible. Queries
   see deltas immediately: SearchEngine._postings_df()/_docs_df() union
   postings_delta/ and docs_delta/ into every scan. NRT caveats (stats
   refreshed at compaction; brand-new terms invisible until the
@@ -39,11 +44,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from marlin_spark.config import EngineConfig
-from marlin_spark.functions.analyzers import token_count_col, tokens_col
+from marlin_spark.functions.analyzers import token_count_col
 from marlin_spark.index.blocks import (
     BLOCK_SCHEMA,
-    make_block_builder,
     make_compaction_rewriter,
+    make_doc_range_builder,
 )
 from marlin_spark.index.catalog import IndexCatalog, term_bucket_col
 
@@ -80,8 +85,9 @@ class IncrementalIndexer:
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """foreachBatch body: append one delta segment of posting blocks.
 
-        Idempotent per batch_id (streaming retry safety): the delta
-        partition dir is overwritten, mirroring the reference's
+        Writes docs_delta/batch=N, then postings_delta/batch=N built from
+        it. Idempotent per batch_id (streaming retry safety): both delta
+        dirs are overwritten, mirroring the reference's
         one-LMDB-txn-per-batch (si_write_end)."""
         cfg = self.cfg
         base = int(self.stats.get("max_docid", self.stats["n_docs"]))
@@ -113,37 +119,6 @@ class IncrementalIndexer:
             )
             .withColumn("dl", dl_col)
         )
-        # positions packed (field_priority << 16) | pos, like the build
-        tok_parts = []
-        for prio, fname in enumerate(cfg.indexed_fields):
-            t = docs.select(
-                "docid",
-                "dl",
-                F.explode(tokens_col(F.col(fname), cfg.analyzer, "index")).alias("t"),
-            ).select(
-                F.col("t.term").alias("term"),
-                "docid",
-                (F.col("t.pos") + F.lit(prio << 16)).alias("pos"),
-                "dl",
-            )
-            tok_parts.append(t)
-        tok = tok_parts[0]
-        for t in tok_parts[1:]:
-            tok = tok.unionByName(t)
-        builder = make_block_builder(
-            cfg.k1, cfg.b, self.stats["avgdl"], cfg.block_size, cfg.range_size
-        )
-        blocks = (
-            tok.withColumn("range_id", (F.col("docid") / cfg.range_size).cast("int"))
-            .repartition("term", "range_id")
-            .sortWithinPartitions("term", "docid", "pos")
-            .drop("range_id")
-            .mapInPandas(builder, BLOCK_SCHEMA)
-            .withColumn("bucket", term_bucket_col(F.col("term"), cfg.n_term_buckets))
-        )
-        blocks.write.mode("overwrite").partitionBy("bucket").parquet(
-            self.cat.path(f"postings_delta/batch={batch_id}")
-        )
         # carry EVERY source column (not just the default transcript
         # schema): _docs_df() selects the base docs schema from deltas,
         # so an auto-mapped index with extra stored fields must find
@@ -151,6 +126,35 @@ class IncrementalIndexer:
         keep = [c for c in docs.columns if c not in ("dl", "range_id", "docid")]
         docs.select("docid", *keep, "dl").write.mode("overwrite").parquet(
             self.cat.path(f"docs_delta/batch={batch_id}")
+        )
+        # the postings delta is built from the docs delta just written:
+        # its tokens never leave the task that tokenized them
+        self._delta_blocks(batch_id).write.mode("overwrite").parquet(
+            self.cat.path(f"postings_delta/batch={batch_id}")
+        )
+
+    def _delta_blocks(self, batch_id: int) -> DataFrame:
+        """Posting blocks of the written docs delta ``batch_id``, built
+        like the base build's stage B. Repartitioning by doc range gives
+        each task whole ranges, so its blocks are final (no partial
+        blocks, no merge shuffle) and the doc-range repartition is the
+        only exchange. ``bucket`` is a data column, not a partition dir:
+        every delta reader filters on it by row-group pushdown."""
+        cfg = self.cfg
+        fields = list(cfg.indexed_fields)
+        builder = make_doc_range_builder(
+            cfg.analyzer, cfg.k1, cfg.b, self.stats["avgdl"],
+            cfg.block_size, cfg.range_size, fields=fields,
+        )
+        docs = self.spark.read.parquet(
+            self.cat.path(f"docs_delta/batch={batch_id}")
+        ).select("docid", "dl", *fields)
+        return (
+            docs.repartition((F.col("docid") / cfg.range_size).cast("int"))
+            .sortWithinPartitions("docid")
+            .mapInPandas(builder, BLOCK_SCHEMA)
+            .withColumn("bucket", term_bucket_col(F.col("term"), cfg.n_term_buckets))
+            .sortWithinPartitions("bucket", "term", "range_id", "block_id")
         )
 
     # ------------------------------------------------------------------

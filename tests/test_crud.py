@@ -7,12 +7,18 @@ path immediately (fresh engine), compaction folds tombstones + deltas and
 refreshes n_docs/avgdl/df so post-compaction ranking is rank-identical to
 an oracle built over the edited corpus (same docids)."""
 
+import contextlib
 import datetime as dt
+import os
 import shutil
 
+import numpy as np
+import pyarrow.dataset as pads
 import pytest
 
+from marlin_spark.functions.codec import decode_block, decode_positions
 from marlin_spark.oracle.bm25 import OracleIndex, assign_docids
+from marlin_spark.oracle.tokenizer import analyze
 from marlin_spark.query.engine import SearchEngine
 from marlin_spark.streaming.incremental import IncrementalIndexer
 
@@ -97,6 +103,147 @@ def test_two_deltas_search_and_compact(spark, crud_index, tiny_rows):
             assert _ranks(eng.search(q, k=10, use_wand=wand)) == want, (q, wand)
         local = [(doc, round(s, 6)) for doc, s in eng.search_local(q, k=10)]
         assert local == want, q
+
+
+def _assert_paths_match(eng, queries, oracle):
+    """WAND, exact and local search all rank like ``oracle``."""
+    for q in queries:
+        want = [(doc, round(s, 6)) for doc, s in oracle.search(q, k=10)]
+        for wand in (True, False):
+            assert _ranks(eng.search(q, k=10, use_wand=wand)) == want, (q, wand)
+        local = [(doc, round(s, 6)) for doc, s in eng.search_local(q, k=10)]
+        assert local == want, q
+
+
+def test_empty_micro_batch(spark, crud_index, tiny_rows):
+    """foreachBatch delivers empty micro-batches routinely: an empty
+    delta segment is committed and every search path and compact() keep
+    working on it."""
+    d, cfg = crud_index
+    inc = IncrementalIndexer(spark, d, cfg)
+    inc.process_batch(_batch(spark, []), 0)
+    assert len(inc.cat.committed_delta_dirs("postings")) == 1
+    oracle = OracleIndex(assign_docids(tiny_rows))
+    queries = ["worst", "this best", "test"]
+    _assert_paths_match(SearchEngine(spark, d, cfg), queries, oracle)
+    inc.compact()
+    assert not inc.cat.committed_delta_dirs("postings")
+    _assert_paths_match(SearchEngine(spark, d, cfg), queries, oracle)
+
+
+_STRADDLE_WORDS = ["worst", "test", "best", "this", "bi", "lefu", "ta", "de"]
+
+
+def _straddle_rows(conv, n=150):
+    """More turns than one 64-doc range, with repeated terms (tf > 1) and
+    a tool field that sometimes repeats a text term."""
+    rows = []
+    for i in range(n):
+        words = [
+            _STRADDLE_WORDS[(i * 7 + j * 3) % len(_STRADDLE_WORDS)]
+            for j in range(1 + i % 6)
+        ]
+        tool = None if i % 3 == 0 else _STRADDLE_WORDS[i % 4] + " run"
+        rows.append((conv, i, "user", " ".join(words), tool))
+    return rows
+
+
+@contextlib.contextmanager
+def _uncoalesced_shuffle(spark):
+    """Keep every shuffle partition of a small batch its own task (AQE
+    would coalesce them into one), so the doc ranges of a batch are
+    built by several tasks."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+@pytest.fixture(scope="module")
+def two_field_index(spark, tiny_df, tmp_path_factory):
+    from marlin_spark.config import EngineConfig
+    from marlin_spark.index.build import IndexBuilder
+
+    d = str(tmp_path_factory.mktemp("two_field_idx"))
+    cfg = EngineConfig(
+        block_size=16, range_size=64, n_term_buckets=8,
+        indexed_fields=("text", "tool"),
+    )
+    IndexBuilder(spark, d, cfg).build(tiny_df, build_id="t2")
+    return d, cfg
+
+
+def test_delta_batch_straddling_ranges_has_whole_blocks(spark, two_field_index):
+    """A micro-batch wider than one doc range (and sharing its first
+    range with the base) is cut into whole blocks per (term, range):
+    block ids 0..m-1, docids rising inside the batch's docid window, and
+    decoded postings equal to the analyzer over the batch rows, with
+    positions packed (field << 16) | pos over the two indexed fields."""
+    d, cfg = two_field_index
+    inc = IncrementalIndexer(spark, d, cfg)
+    rows = _straddle_rows("zz-straddle")
+    batch_id = 1
+    with _uncoalesced_shuffle(spark):
+        inc.process_batch(_batch(spark, rows), batch_id)
+    offset = int(inc.stats["max_docid"]) + batch_id * int(inc.stats["batch_capacity"])
+    lo, hi = offset + 1, offset + len(rows)
+    assert lo // cfg.range_size < hi // cfg.range_size  # straddles a boundary
+
+    want = {}
+    for rank, (_, _, _, text, tool) in enumerate(sorted(rows, key=lambda r: r[1])):
+        for field, value in enumerate((text, tool)):
+            for term, pos in analyze(value, cfg.analyzer, "index") if value else []:
+                want.setdefault((term, offset + rank + 1), []).append((field << 16) | pos)
+
+    blocks = pads.dataset(
+        os.path.join(d, f"postings_delta/batch={batch_id}"), format="parquet"
+    ).to_table().to_pandas()
+    got = {}
+    for (term, rid), grp in blocks.groupby(["term", "range_id"]):
+        assert sorted(grp["block_id"]) == list(range(len(grp))), (term, rid)
+        for blk in grp.itertuples():
+            docids, tfs, _ = decode_block(bytes(blk.postings))
+            docids = docids.astype(np.int64)
+            assert blk.n_docs == docids.size <= cfg.block_size
+            assert (np.diff(docids) > 0).all()
+            assert lo <= docids[0] and docids[-1] <= hi
+            assert (docids // cfg.range_size == rid).all()
+            assert (blk.first_docid, blk.last_docid) == (docids[0], docids[-1])
+            pos = decode_positions(bytes(blk.positions), tfs)
+            starts = np.concatenate(([0], np.cumsum(tfs.astype(np.int64))))
+            for i, docid in enumerate(docids.tolist()):
+                got[(term, docid)] = pos[starts[i]:starts[i + 1]].tolist()
+    assert got == want
+
+
+def test_delta_batch_straddling_ranges_rank_identical(spark, crud_index, tiny_rows):
+    """Search over a range-straddling delta ranks like the oracle: before
+    compaction like one that scores with the base statistics (the NRT
+    contract: df, n_docs and avgdl refresh at compaction and new terms
+    stay invisible), after compaction like one over base + batch."""
+    d, cfg = crud_index
+    inc = IncrementalIndexer(spark, d, cfg)
+    rows = _straddle_rows("zz-straddle")
+    with _uncoalesced_shuffle(spark):
+        inc.process_batch(_batch(spark, rows), 0)
+    offset = int(inc.stats["max_docid"])
+    streamed = [
+        (offset + rank + 1, r[3]) for rank, r in enumerate(sorted(rows, key=lambda r: r[1]))
+    ]
+    base = OracleIndex(assign_docids(tiny_rows))
+    nrt = OracleIndex(assign_docids(tiny_rows) + streamed)
+    nrt.postings = {t: p for t, p in nrt.postings.items() if t in base.postings}
+    nrt.n_docs, nrt.avgdl, nrt.df = base.n_docs, base.avgdl, base.df
+    queries = ["worst", "bi lefu", "this best", "ta de bi", "test"]
+    _assert_paths_match(SearchEngine(spark, d, cfg), queries, nrt)
+
+    inc.compact()
+    full = OracleIndex(assign_docids(tiny_rows) + streamed)
+    _assert_paths_match(SearchEngine(spark, d, cfg), queries, full)
+
 
 def test_delete_excludes_doc_from_every_path(spark, crud_index, tiny_oracle):
     d, cfg = crud_index

@@ -135,3 +135,34 @@ def test_simhash_pair_join_is_banded_hash_join(spark):
     assert "BroadcastNestedLoopJoin" not in plan_str
     assert "CartesianProduct" not in plan_str
     assert "Join" in plan_str  # there IS a join, and it's hash-based
+
+
+def test_delta_append_builds_blocks_without_token_shuffle(spark, tiny_index, tmp_path):
+    """A streaming append builds its postings from the docs delta like
+    the base build: no exploded token stream (Generate) and exactly one
+    Exchange, the doc-range repartition."""
+    import datetime as dt
+    import re
+    import shutil
+
+    from marlin_spark.streaming.incremental import IncrementalIndexer
+
+    base_dir, cfg, _ = tiny_index
+    d = str(tmp_path / "plan_idx")
+    shutil.copytree(base_dir, d)
+    inc = IncrementalIndexer(spark, d, cfg)
+    inc.process_batch(
+        spark.createDataFrame(
+            [("zz-plan", i, "user", "worst plan test", None, dt.datetime(2025, 1, 1))
+             for i in range(3)],
+            "conv_id string, turn_idx int, role string, text string, "
+            "tool string, ts timestamp",
+        ),
+        0,
+    )
+    plan_str = _plan(inc._delta_blocks(0))
+    assert "Generate" not in plan_str
+    exchanges = re.findall(r"Exchange (\w+)\(([^)]*)", plan_str)
+    assert len(exchanges) == 1, exchanges
+    assert exchanges[0][0] == "hashpartitioning" and "docid" in exchanges[0][1]
+    assert "MapInPandas" in plan_str

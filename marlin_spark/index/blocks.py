@@ -213,8 +213,8 @@ def make_doc_range_builder(
     of a term's posting list.
 
     Groups cut by split boundaries yield PARTIAL blocks for the same
-    (term, range_id) with disjoint docid slabs; make_block_merger folds
-    them into full blocks during the bucket-coalesce shuffle.
+    (term, range_id); make_block_merger folds them into full blocks
+    during the bucket-coalesce shuffle.
 
     ``fields``: ordered indexed columns; field k's positions are packed
     as (k << 16) | pos — the reference's IDPRIORITY scheme
@@ -412,6 +412,26 @@ def make_doc_range_builder(
     return builder
 
 
+def _docid_order(grp, docids, tfs, dls, positions):
+    """Doc-level arrays of contiguous groups ``grp``, reordered so the
+    docids rise within every group; each doc's tf, dl and run of tf
+    positions move with it. A scan split that packs non-adjacent docs
+    files builds partial blocks whose docid slabs interleave, so their
+    first_docid order alone does not sort a group. Already-sorted input
+    comes back as is."""
+    if docids.size < 2 or bool(
+        ((docids[1:] > docids[:-1]) | (grp[1:] != grp[:-1])).all()
+    ):
+        return docids, tfs, dls, positions
+    perm = np.lexsort((docids, grp))
+    tf64 = tfs.astype(np.int64)
+    tf_p = tf64[perm]
+    src = np.cumsum(tf64) - tf64
+    dst = np.cumsum(tf_p) - tf_p
+    pidx = np.repeat(src[perm] - dst, tf_p) + np.arange(int(tf_p.sum()))
+    return docids[perm], tfs[perm], dls[perm], positions[pidx]
+
+
 def make_block_merger(
     k1: float,
     b: float,
@@ -423,10 +443,11 @@ def make_block_merger(
 
     Runs inside the bucket-coalesce shuffle (keyed by (bucket,
     range_id%4), which co-locates every block of a (term, range) group —
-    bucket is a pure function of term). Partial blocks of one group cover
-    DISJOINT docid slabs, so ordering them by first_docid and
-    concatenating their decoded arrays reconstructs the full sorted
-    group; re-cutting yields blocks bit-identical to a single-pass build.
+    bucket is a pure function of term). The partial blocks of one group
+    are decoded in first_docid order and their docs sorted by docid
+    (_docid_order: slabs are disjoint on the default docid path but can
+    interleave on the source_path one), so re-cutting yields blocks
+    bit-identical to a single-pass build.
     Input/output schema: BLOCK_SCHEMA + trailing bucket column.
     """
     acc = counters or {}
@@ -487,6 +508,9 @@ def make_block_merger(
             posx = pdf["positions"].to_numpy()[rows].tolist()
             docids, tfs, dls, _ = decode_blocks_many(post, nd)
             positions = decode_positions_many(posx, tfs)
+            docids, tfs, dls, positions = _docid_order(
+                np.repeat(g_of[multi], nd), docids, tfs, dls, positions
+            )
             res = emit_blocks_vec(
                 uniq,
                 np.repeat(c[multi], nd),

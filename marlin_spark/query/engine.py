@@ -22,7 +22,7 @@ import math
 from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd  # noqa: F401 — resolves stringified UDF type hints
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -36,6 +36,14 @@ from marlin_spark.query.wand import (
 )
 
 DECODE_SCHEMA = "term string, docid long, tf int, dl int"
+_BATCH_SCHEMA = "query_id string, docid long, score double, rank int"
+# search_many_wand scores a batch on the driver while its query postings
+# (the summed df of the terms of every distinct query) are at most this
+# many, else as mapInPandas over the doc ranges. Measured crossover on a
+# 4-core host, local[4], 200-2,000 queries over 13.6k-2.16M docs and
+# 1-32 scorer partitions: the driver won up to 88M query postings and
+# the range-parallel job from 142M on. A wider cluster moves it lower.
+DRIVER_BATCH_POSTINGS = 100_000_000
 
 
 def _in_pred(col: str, values) -> "F.Column":
@@ -96,6 +104,28 @@ def _decode_blocks(batches):
                     "dl": np.concatenate(out_dl).astype("int32"),
                 }
             )
+
+
+def _rank_rows(qids: np.ndarray, docids: np.ndarray, scores: np.ndarray, k: int):
+    """Scorer rows ranked per query by (round(score, 9) desc, docid asc),
+    the first k per query kept. Returns (row indices in rank order,
+    their 1-based ranks, their rounded scores). Python's round is
+    half-even on the binary value and Spark's F.round, which ranks
+    search, is HALF_UP on the decimal string: for a score exactly half
+    way at the 10th decimal, search and the paths ranked here
+    (search_local, search_many_wand) can differ by 1e-9."""
+    if scores.size == 0:
+        return np.zeros(0, np.int64), np.zeros(0, np.int64), np.zeros(0)
+    key = np.fromiter(
+        (round(s, 9) for s in scores.tolist()), np.float64, scores.size
+    )
+    o = np.lexsort((docids, -key, qids))
+    q = qids[o]
+    pos = np.arange(o.size)
+    first = np.r_[True, q[1:] != q[:-1]]
+    rank = pos - np.maximum.accumulate(np.where(first, pos, 0)) + 1
+    top = rank <= k
+    return o[top], rank[top], key[o[top]]
 
 
 class SearchEngine:
@@ -574,14 +604,21 @@ class SearchEngine:
             deleted=self.deleted, counters=counters,
         )
 
-    # WAND path
-    def _search_wand(self, plan: QueryPlan) -> DataFrame:
+    def _wand_counters(self) -> dict:
+        """Fresh ranges_scored / ranges_skipped accumulators, kept as
+        _last_wand_counters (they also count when the scorer runs on the
+        driver)."""
         sc = self.spark.sparkContext
         acc = {
             "ranges_skipped": sc.accumulator(0),
             "ranges_scored": sc.accumulator(0),
         }
         self._last_wand_counters = acc
+        return acc
+
+    # WAND path
+    def _search_wand(self, plan: QueryPlan) -> DataFrame:
+        acc = self._wand_counters()
         blocks = self._matched_blocks(plan).select(*SCORER_COLS)
         n_part = self._scorer_partitions()
         local = (
@@ -810,29 +847,36 @@ class SearchEngine:
         self._bucket_cache[bucket] = entry  # (re)insert = most recent
         return entry
 
-    def _local_topk(self, plan: QueryPlan) -> list[tuple[int, float]]:
+    def _driver_blocks(self, terms: list[str]) -> list[pd.DataFrame]:
+        """The SCORER_COLS block rows of ``terms``, read on the driver:
+        row slices of the cached base buckets (_bucket_table) plus the
+        matching rows of every committed delta segment. Deltas are never
+        cached: they appear and disappear between compactions and must
+        stay visible without refresh()."""
         import pyarrow.dataset as pads
 
-        terms = list(plan.term_meta)
-        buckets = sorted(
-            {term_bucket_py(t, self.cfg.n_term_buckets) for t in terms}
-        )
+        by_bucket: dict[int, list[str]] = {}
+        for t in terms:
+            by_bucket.setdefault(
+                term_bucket_py(t, self.cfg.n_term_buckets), []
+            ).append(t)
         pdfs = []
-        for b in buckets:
+        for b, b_terms in sorted(by_bucket.items()):
             pdf_b, spans, _ = self._bucket_table(b)
-            for t in terms:
-                span = spans.get(t)
-                if span is not None:
-                    pdfs.append(pdf_b.iloc[span[0]: span[1]])
+            found = [spans[t] for t in b_terms if t in spans]
+            if len(found) == 1:
+                pdfs.append(pdf_b.iloc[found[0][0]: found[0][1]])
+            elif found:
+                pdfs.append(pdf_b.iloc[
+                    np.concatenate([np.arange(lo, hi) for lo, hi in found])
+                ])
         deltas = self._delta_dirs("postings")
         if deltas:
             flt = (
-                pads.field("bucket").isin(buckets)
+                pads.field("bucket").isin(sorted(by_bucket))
                 & pads.field("term").isin(terms)
             )
-            for d in deltas:  # uncompacted NRT segments
-                # deltas are never cached: they appear/disappear between
-                # compactions and must stay visible without refresh()
+            for d in deltas:
                 pdfs.append(
                     pads.dataset(
                         d, partitioning="hive", format="parquet"
@@ -840,12 +884,15 @@ class SearchEngine:
                         columns=SCORER_COLS, filter=flt
                     ).to_pandas()
                 )
-        out = next(self._one_query_scorer(plan)(iter(pdfs)))
-        ranked = sorted(
-            zip(out["docid"], out["score"]),
-            key=lambda ds: (-round(float(ds[1]), 9), int(ds[0])),
-        )[: plan.k]
-        return [(int(d), float(s)) for d, s in ranked]
+        return pdfs
+
+    def _local_topk(self, plan: QueryPlan) -> list[tuple[int, float]]:
+        out = next(self._one_query_scorer(plan)(
+            iter(self._driver_blocks(list(plan.term_meta)))
+        ))
+        d, s = out["docid"].to_numpy(), out["score"].to_numpy()
+        idx, _, _ = _rank_rows(out["query_id"].to_numpy(), d, s, plan.k)
+        return [(int(x), float(y)) for x, y in zip(d[idx].tolist(), s[idx].tolist())]
 
     def _search_local(self, plan: QueryPlan) -> DataFrame:
         rows = self._local_topk(plan)
@@ -1292,10 +1339,20 @@ class SearchEngine:
         return seeds or None
 
     def search_many_wand(self, queries: dict[str, str], k: int = 10, mode: str = "any") -> DataFrame:
-        """Batched block-max WAND: one dictionary lookup + one pruned
-        postings scan for ALL queries; each block decoded once per range,
-        per-query theta pruning, per-partition top-k — avoids the exact
-        path's |candidates| x |queries| shuffle entirely."""
+        """Batched block-max WAND: one dictionary lookup and one block
+        read for ALL queries, each block decoded once per range, per-query
+        theta pruning — no |candidates| x |queries| shuffle as on the
+        exact path. Returns (query_id, docid, score, rank) rows, score
+        rounded to 9 dp.
+
+        A batch whose query postings are at most DRIVER_BATCH_POSTINGS is
+        scored on the driver over the blocks search_local reads (cached
+        base buckets plus committed deltas): no Spark job and no Python
+        worker. A bigger one runs the same scorer as mapInPandas over the
+        blocks repartitioned by range_id, and each task's top k per query
+        is collected. Either way the rows are ranked per query on the
+        driver and come back as a local DataFrame."""
+        acc = self._wand_counters()
         if self._tombstones_distributed:
             # per-partition top-k with an unseeable tombstone set could
             # evict live docs; the exact batch path anti-joins correctly
@@ -1308,7 +1365,7 @@ class SearchEngine:
         kth_of = {
             r["term"]: r["top_maxes"][k - 1]
             for r in dict_rows
-            if r.get("top_maxes") and len(r["top_maxes"]) >= k
+            if k >= 1 and r.get("top_maxes") and len(r["top_maxes"]) >= k
         }
         metas: dict[str, dict] = {}
         n_slots: dict[str, int] = {}
@@ -1322,15 +1379,13 @@ class SearchEngine:
                 metas[qid] = meta
                 n_slots[qid] = len(terms)
         if not metas:
-            return self.spark.createDataFrame(
-                [], "query_id string, docid long, score double, rank int"
-            )
+            return self.spark.createDataFrame([], _BATCH_SCHEMA)
         # dedupe identical term-sets: real query fleets repeat queries
         # (Zipf over query space), and two queries with the same term set
         # and slot count score identically — run the scorer once per
-        # distinct set, fan results back out with a broadcast join
+        # distinct set, fan results back out after ranking
         rep_of: dict[tuple, str] = {}
-        aliases: list[tuple[str, str]] = []  # (rep, qid)
+        fanout: dict[str, list[str]] = {}  # rep -> the qids it answers
         rep_metas: dict[str, dict] = {}
         rep_slots: dict[str, int] = {}
         for qid in sorted(metas):
@@ -1340,71 +1395,56 @@ class SearchEngine:
                 rep_of[key] = qid
                 rep_metas[qid] = metas[qid]
                 rep_slots[qid] = n_slots[qid]
-                aliases.append((qid, qid))
-            else:
-                aliases.append((rep, qid))
-        deduped = len(rep_metas) < len(metas)
+                rep = qid
+            fanout.setdefault(rep, []).append(qid)
         metas, n_slots = rep_metas, rep_slots
         matched = sorted({t for m in metas.values() for t in m})
-        buckets = sorted(
-            {term_bucket_py(t, self.cfg.n_term_buckets) for t in matched}
-        )
-        blocks = (
-            self._postings_df()
-            .filter(_in_pred("bucket", buckets) & _in_pred("term", matched))
-            .select(*SCORER_COLS)
-        )
-        n_part = self._scorer_partitions()
         seeds = self._theta_seeds(metas, k, kth_of, mode)
         scorer = make_batch_wand_scorer(
             metas, n_slots, k, mode, self.cfg.k1, self.cfg.b, self.avgdl,
-            deleted=self.deleted, theta_seed=seeds,
+            deleted=self.deleted, theta_seed=seeds, counters=acc,
         )
-        local = blocks.repartition(n_part, "range_id").mapInPandas(
-            scorer, SCORER_SCHEMA
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc(F.round("score", 9)), F.asc("docid")
-        )
-        # explicit partition count for the rank exchange: left to AQE the
-        # ~10 MB of per-partition top-k rows coalesce into ONE task — a
-        # serial merge whose wall clock is identical at every cluster
-        # size, i.e. pure fixed cost against N->4N scaling. The window's
-        # required clustering (query_id) is satisfied, so no 2nd exchange.
-        n_rank = max(8, self.spark.sparkContext.defaultParallelism)
-        ranked = (
-            local.repartition(n_rank, "query_id")
-            .withColumn("score", F.round("score", 9))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "docid", "score", "rank")
-        )
-        if deduped:
-            # fan results back out to duplicate queries AFTER ranking
-            # (aliases rank identically) with a pure-Catalyst literal
-            # map + explode — a createDataFrame/broadcast-join here cost
-            # ~1.3 s/batch spinning python workers for a 1000-row table
-            fanout: dict[str, list[str]] = {}
-            for rep, qid in aliases:
-                fanout.setdefault(rep, []).append(qid)
-
-            def _q(s: str) -> str:
-                return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-            body = ",".join(
-                _q(rep) + ",array(" + ",".join(_q(q) for q in qids) + ")"
-                for rep, qids in fanout.items()
+        postings = sum(df_map[t] for m in metas.values() for t in m)
+        if postings <= DRIVER_BATCH_POSTINGS:
+            out = next(scorer(iter(self._driver_blocks(matched))))
+        else:
+            buckets = sorted(
+                {term_bucket_py(t, self.cfg.n_term_buckets) for t in matched}
             )
-            # single parsed expression: per-literal F.lit/py4j calls for
-            # ~2000 literals would put ~0.5 s back on the serial driver
-            m = F.expr(f"map({body})")
-            ranked = ranked.select(
-                F.explode(m[F.col("query_id")]).alias("out_qid"),
-                "docid", "score", "rank",
-            ).select(
-                F.col("out_qid").alias("query_id"), "docid", "score", "rank"
+            blocks = (
+                self._postings_df()
+                .filter(_in_pred("bucket", buckets) & _in_pred("term", matched))
+                .select(*SCORER_COLS)
             )
-        return ranked
+            # each task keeps its top k per query: the rows to merge are
+            # at most partitions x queries x k, collected for the ranking
+            out = (
+                blocks.repartition(self._scorer_partitions(), "range_id")
+                .mapInPandas(scorer, SCORER_SCHEMA)
+                .toArrow()
+                .to_pandas()
+            )
+        return self._ranked_batch(out, k, fanout)
+
+    def _ranked_batch(
+        self, out: pd.DataFrame, k: int, fanout: dict[str, list[str]]
+    ) -> DataFrame:
+        """Scorer rows ranked per query, the first k kept, then fanned out
+        from each scored query to the query ids ``fanout`` lists for it
+        (aliases rank identically), as a local DataFrame."""
+        q, d = out["query_id"].to_numpy(), out["docid"].to_numpy(np.int64)
+        idx, rank, score = _rank_rows(q, d, out["score"].to_numpy(np.float64), k)
+        if not idx.size:
+            return self.spark.createDataFrame([], _BATCH_SCHEMA)
+        reps = q[idx].tolist()
+        n = [len(fanout[r]) for r in reps]
+        pdf = pd.DataFrame({
+            "query_id": [qid for r in reps for qid in fanout[r]],
+            "docid": np.repeat(d[idx], n),
+            "score": np.repeat(score, n),
+            "rank": np.repeat(rank, n).astype(np.int32),
+        })
+        return self.spark.createDataFrame(pdf, _BATCH_SCHEMA)
 
     def search_many(self, queries: dict[str, str], k: int = 10, mode: str = "any") -> DataFrame:
         """Score MANY queries in one Spark job (throughput path for the
@@ -1424,9 +1464,7 @@ class SearchEngine:
                         (qid, t, float(self.idf(df_map[t])), slot, len(terms))
                     )
         if not rows:
-            return self.spark.createDataFrame(
-                [], "query_id string, docid long, score double, rank int"
-            )
+            return self.spark.createDataFrame([], _BATCH_SCHEMA)
         meta = self.spark.createDataFrame(
             rows, "query_id string, term string, idf double, slot int, n_slots int"
         )

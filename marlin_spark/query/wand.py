@@ -3,11 +3,12 @@
 One numpy kernel answers every top-k path: ``search`` (WAND) and
 ``search_local`` run it as a batch of one query, ``search_many_wand``
 with a whole batch. It runs as mapInPandas over the matched block rows
-repartitioned by doc range (range_id), or on the driver for the local
-path. Each block is decoded once per range, and the decoded arrays are
-shared by every query that uses its term. Ranges are visited in
-descending upper-bound order, so each query's running top-k threshold
-THETA rises fast. Every pruning layer is exact:
+repartitioned by doc range (range_id), or on the driver over cached
+block rows: for the local path, and for a batch whose query postings
+are at most ``engine.DRIVER_BATCH_POSTINGS``. Each block is decoded once
+per range, and the decoded arrays are shared by every query that uses
+its term. Ranges are visited in descending upper-bound order, so each
+query's running top-k threshold THETA rises fast. Every pruning layer is exact:
 
 - range level (block-max): a query's bound in a range is the sum over its
   terms of idf * (largest block max_tfnorm of the term in the range). A

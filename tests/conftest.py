@@ -41,3 +41,16 @@ def tiny_index(spark, tiny_df, tmp_path_factory):
     builder = IndexBuilder(spark, d, cfg)
     counters = builder.build(tiny_df, build_id="t0")
     return d, cfg, counters
+
+
+@pytest.fixture(scope="session")
+def one_range_index(spark, tiny_df, tmp_path_factory):
+    """The tiny corpus at the default range_size: a single doc range, so
+    the range-keyed scorer stages plan one partition."""
+    from marlin_spark.config import EngineConfig
+    from marlin_spark.index.build import IndexBuilder
+
+    d = str(tmp_path_factory.mktemp("one_range_index"))
+    cfg = EngineConfig(block_size=16, n_term_buckets=8)
+    IndexBuilder(spark, d, cfg).build(tiny_df, build_id="t1")
+    return d, cfg

@@ -90,3 +90,54 @@ def test_build_on_sorted_source_matches_oracle(spark, tmp_path, sorted_corpus):
     assert got == sorted(got)
     n = len(got)
     assert docs.agg(F.min("docid"), F.max("docid")).first() == (1, n)
+
+
+def test_source_path_build_postings_decode_in_order(spark, tmp_path, sorted_corpus):
+    """A default-config build given source_path writes postings whose
+    docids lie in [1, n_docs] and rise inside every block, and it ranks
+    like the oracle. A scan split of this path can pack non-adjacent docs
+    files, so the partial blocks the merger folds interleave by docid."""
+    import numpy as np
+    import pyarrow.dataset as pads
+
+    from marlin_spark.config import EngineConfig
+    from marlin_spark.functions.codec import decode_block
+    from marlin_spark.index.build import IndexBuilder
+    from marlin_spark.index.catalog import IndexCatalog
+    from marlin_spark.oracle.bm25 import OracleIndex, assign_docids
+    from marlin_spark.query.engine import SearchEngine
+
+    idx = str(tmp_path / "idx")
+    cfg = EngineConfig()
+    IndexBuilder(spark, idx, cfg).build(
+        spark.read.parquet(sorted_corpus), "b0", source_path=sorted_corpus
+    )
+    rows = pads.dataset(sorted_corpus, format="parquet").to_table(
+        columns=["conv_id", "turn_idx", "text"]
+    ).to_pylist()
+    n_docs = len(rows)
+    blocks = pads.dataset(
+        IndexCatalog(idx).path("postings"), partitioning="hive", format="parquet"
+    ).to_table(columns=["first_docid", "n_docs", "postings"]).to_pylist()
+    assert blocks
+    for blk in blocks:
+        docids = decode_block(bytes(blk["postings"]))[0].astype(np.int64)
+        assert docids.size == blk["n_docs"]
+        assert 1 <= docids.min() and docids.max() <= n_docs
+        assert (np.diff(docids) > 0).all()
+        assert docids[0] == blk["first_docid"]
+
+    oracle = OracleIndex(assign_docids(rows))
+    by_df = sorted(oracle.postings, key=lambda t: (-oracle.df(t), t))
+    head, mid = by_df[:3], by_df[len(by_df) // 4: len(by_df) // 4 + 3]
+    queries = [head[0], mid[0], f"{head[1]} {mid[1]}", f"{head[2]} {mid[2]} {mid[0]}"]
+    eng = SearchEngine(spark, idx, cfg)
+    for q in queries:
+        want = [(d, round(s, 6)) for d, s in oracle.search(q, k=10)]
+        local = [(d, round(s, 6)) for d, s in eng.search_local(q, k=10)]
+        wand = [
+            (r["docid"], round(r["score"], 6))
+            for r in eng.search(q, k=10, use_wand=True).collect()
+        ]
+        assert local == want, q
+        assert wand == want, q

@@ -166,3 +166,24 @@ def test_delta_append_builds_blocks_without_token_shuffle(spark, tiny_index, tmp
     assert len(exchanges) == 1, exchanges
     assert exchanges[0][0] == "hashpartitioning" and "docid" in exchanges[0][1]
     assert "MapInPandas" in plan_str
+
+
+def test_batch_wand_result_is_ranked_on_driver(spark, engine, one_range_index, monkeypatch):
+    """Batched WAND ranks and fans out on the driver, so its result is a
+    local relation, with no Python node, Exchange or Window, whether the
+    scorer ran on the driver (one doc range, or a small batch on many)
+    or as mapInPandas over the doc ranges (threshold forced to 0)."""
+    import marlin_spark.query.engine as engine_mod
+
+    d, cfg = one_range_index
+    queries = {"a": "this best", "b": "worst", "c": "worst"}
+    plans = [
+        _plan(SearchEngine(spark, d, cfg).search_many_wand(queries, k=5)),
+        _plan(engine.search_many_wand(queries, k=5)),
+    ]
+    monkeypatch.setattr(engine_mod, "DRIVER_BATCH_POSTINGS", 0)
+    plans.append(_plan(engine.search_many_wand(queries, k=5)))
+    for p in plans:
+        assert "LocalTableScan" in p, p
+        for node in ("MapInPandas", "Exchange", "Window"):
+            assert node not in p, (node, p)
